@@ -4,7 +4,8 @@ Defaults are tuned so the same code is correct on local[N] (tests/bench)
 and sane on a large cluster: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), shuffle partitions sized to the
 parallelism at hand, UTC session time zone (determinism for the DuckDB
-oracle), Arrow enabled for the pandas-UDF slow path.
+oracle), Arrow enabled for the pandas-UDF slow path. Python workers run
+under ``_pyworker`` (see its docstring) with this package on their path.
 """
 
 from __future__ import annotations
@@ -16,6 +17,22 @@ from pyspark.sql import SparkSession
 # Read by tables.load_table for events.parquet (TIMESTAMP(NANOS) column);
 # safe to set dynamically on any session.
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+WORKER_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+# the directory that holds this package, so workers can import it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_pythonpath(caller_value: str | None) -> str:
+    """The package's parent directory first, then the caller's entries in
+    their order, each path once."""
+    paths = [_PACKAGE_PARENT, *(caller_value or "").split(os.pathsep)]
+    return os.pathsep.join(dict.fromkeys(p for p in paths if p))
+
+
+def prefer_sort_merge_join(value: str | None) -> bool:
+    """$SPARK_GRAFT_PREFER_SMJ: only 1 / true / yes (any case) select it."""
+    return (value or "").strip().lower() in ("1", "true", "yes")
 
 
 def get_spark(
@@ -54,7 +71,9 @@ def get_spark(
         # plan evidence lives in plans/r13/shj_* + tests/test_plans.py.
         .config(
             "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") else "false",
+            "true"
+            if prefer_sort_merge_join(os.environ.get("SPARK_GRAFT_PREFER_SMJ"))
+            else "false",
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -64,10 +83,12 @@ def get_spark(
         # 128 MB parquet split target: big enough to amortize task overhead
         # at 100 TB (≈800k tasks), small enough to fit executor memory.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.python.daemon.module", "kafka_stream_aggregator_spark._pyworker")
     )
-    if extra:
-        for k, v in extra.items():
-            builder = builder.config(k, v)
+    extra = dict(extra or {})
+    extra[WORKER_PYTHONPATH_CONF] = worker_pythonpath(extra.get(WORKER_PYTHONPATH_CONF))
+    for k, v in extra.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -192,6 +192,54 @@ def decode(schema: Any, buf: bytes, pos: int = 0) -> tuple[Any, int]:
     raise ValueError(f"unsupported avro type {t!r}")
 
 
+_DOUBLE = struct.Struct("<d").unpack_from
+_FLOAT = struct.Struct("<f").unpack_from
+
+
+def reader(schema: Any):
+    """``decode`` specialised to one schema: a ``read(buf, pos) ->
+    (value, next_pos)`` that dispatches on the type once, here, instead of
+    on every value. Scalars, enums and unions get their own readers;
+    records, arrays and maps fall back to ``decode``. Every reader does
+    the same buffer operations as ``decode``, so both return the same
+    values and fail on the same inputs."""
+    if isinstance(schema, list):
+        branches = [reader(b) for b in schema]
+
+        def read_union(buf, pos):
+            idx, pos = _zigzag_decode(buf, pos)
+            return branches[idx](buf, pos)
+
+        return read_union
+    t = schema if isinstance(schema, str) else schema["type"]
+    if t == "null":
+        return lambda buf, pos: (None, pos)
+    if t == "boolean":
+        return lambda buf, pos: (buf[pos] == 1, pos + 1)
+    if t in ("int", "long"):
+        return _zigzag_decode
+    if t == "float":
+        return lambda buf, pos: (_FLOAT(buf, pos)[0], pos + 4)
+    if t == "double":
+        return lambda buf, pos: (_DOUBLE(buf, pos)[0], pos + 8)
+    if t == "string":
+
+        def read_string(buf, pos):
+            n, pos = _zigzag_decode(buf, pos)
+            return buf[pos : pos + n].decode("utf-8"), pos + n
+
+        return read_string
+    if t == "enum":
+        symbols = schema["symbols"]
+
+        def read_enum(buf, pos):
+            idx, pos = _zigzag_decode(buf, pos)
+            return symbols[idx], pos
+
+        return read_enum
+    return lambda buf, pos: decode(schema, buf, pos)
+
+
 # Avro schema mirroring the reference's TradesDataAvro
 # (models.rs:31-44 field order; enums models.rs:7-23).
 TRADES_AVRO_SCHEMA = {

@@ -167,17 +167,15 @@ def decode_trades_avro(framed: DataFrame) -> DataFrame:
     import pandas as pd
 
     from ..schemas import TRADE_SCHEMA
-    from .avro_codec import TRADES_AVRO_SCHEMA, decode
+    from .avro_codec import TRADES_AVRO_SCHEMA
+    from .registry import compile_resolver
 
     cols = [f.name for f in TRADE_SCHEMA.fields]
 
     def dec(batches):
+        resolve = compile_resolver(TRADES_AVRO_SCHEMA, TRADES_AVRO_SCHEMA)
         for pdf in batches:
-            rows = []
-            for raw in pdf["value"]:
-                body = bytes(raw)[5:]
-                rec, _ = decode(TRADES_AVRO_SCHEMA, body)
-                rows.append(tuple(rec[c] for c in cols))
+            rows = [resolve(bytes(raw)[5:]) for raw in pdf["value"]]
             yield pd.DataFrame(rows, columns=cols)
 
     out = framed.mapInPandas(dec, TRADE_SCHEMA)
@@ -200,20 +198,20 @@ def decode_trades_avro_dispatch(
 
     The snapshot is a plain dict riding the closure (one copy per task,
     like a broadcast dim); malformed/unknown-id records are dropped but
-    the stream advances — the reference's behavior for decode errors."""
+    the stream advances — the reference's behavior for decode errors.
+    Each task compiles one resolver per writer id it meets."""
     import pandas as pd
 
-    from .registry import decode_framed_records
+    from .registry import FramedDecoder
 
     cols = [f.name for f in out_schema.fields]
 
     def dec(batches):
+        decoder = FramedDecoder(registry_snapshot, reader_schema)
         for pdf in batches:
-            recs = decode_framed_records(
-                pdf["value"], registry_snapshot, reader_schema
-            )
-            rows = [tuple(r[c] for c in cols) for r in recs if r is not None]
-            yield pd.DataFrame(rows, columns=cols)
+            rows = [r for r in decoder.rows(pdf["value"]) if r is not None]
+            out = pd.DataFrame(rows, columns=decoder.fields)
+            yield out if decoder.fields == cols else out[cols]
 
     out = framed.mapInPandas(dec, out_schema)
     if "timestamp" in cols:

@@ -7,11 +7,17 @@ The reference decodes by the schema id embedded in each message
 id-dispatch over a mixed-version topic, backward/forward resolution
 with an added nullable field, malformed-record drop semantics, and the
 union encoder's branch matching.
+
+Resolution cases run on both decoders: the spec reference (generic
+``decode`` + ``project_record``, which the Java Avro cross-checks use) and
+the compiled resolver behind ``decode_framed_records``; a parity test
+requires equal rows and drop positions over mixed and damaged frames.
 """
 
 from __future__ import annotations
 
 import copy
+import random
 
 import pytest
 
@@ -22,6 +28,7 @@ from kafka_stream_aggregator_spark.streaming.avro_codec import (
 )
 from kafka_stream_aggregator_spark.streaming.registry import (
     SchemaRegistry,
+    compile_resolver,
     decode_framed_records,
     parse_frame,
     project_record,
@@ -59,6 +66,35 @@ def _frame(sid: int, schema, record) -> bytes:
     return b"\x00" + sid.to_bytes(4, "big") + encode(schema, record)
 
 
+def generic_decode_framed(raws, registry_snapshot, reader_schema, on_error="drop"):
+    """The spec reference for ``decode_framed_records``: generic decode of
+    each frame's body by its writer schema, then ``project_record``."""
+    out = []
+    for raw in raws:
+        try:
+            sid, body = parse_frame(bytes(raw))
+            writer = registry_snapshot[sid]
+            rec, _ = decode(writer, body)
+            out.append(project_record(rec, writer, reader_schema))
+        except Exception:
+            if on_error == "raise":
+                raise
+            out.append(None)
+    return out
+
+
+def compiled_project(record, writer_schema, reader_schema):
+    """``project_record`` through the compiled resolver: encode under the
+    writer, resolve, name the tuple's fields."""
+    row = compile_resolver(writer_schema, reader_schema)(encode(writer_schema, record))
+    return dict(zip([f["name"] for f in reader_schema["fields"]], row))
+
+
+# each resolution case below runs once per decoder
+DECODERS = (generic_decode_framed, decode_framed_records)
+PROJECTIONS = (project_record, compiled_project)
+
+
 def test_registry_register_dedup_and_versions():
     reg = SchemaRegistry()
     subject = SchemaRegistry.subject_for_topic("trades-option-btc")
@@ -89,12 +125,13 @@ def test_mixed_schema_id_topic_decodes_per_record():
             frames.append(_frame(id2, TRADE_V2, rec))
         else:
             frames.append(_frame(id1, TRADE_V1, _trade(seq)))
-    out = decode_framed_records(frames, reg.snapshot(), TRADE_V2)
-    assert all(r is not None for r in out)
-    for seq, rec in enumerate(out):
-        assert rec["trade_seq"] == seq
-        assert rec["price"] == 42.5 + seq
-        assert rec["venue"] == ("deribit" if seq % 2 else None)
+    for decode_framed in DECODERS:
+        out = decode_framed(frames, reg.snapshot(), TRADE_V2)
+        assert all(r is not None for r in out)
+        for seq, rec in enumerate(out):
+            assert rec["trade_seq"] == seq
+            assert rec["price"] == 42.5 + seq
+            assert rec["venue"] == ("deribit" if seq % 2 else None)
 
 
 def test_forward_resolution_drops_unknown_writer_field():
@@ -103,25 +140,28 @@ def test_forward_resolution_drops_unknown_writer_field():
     id2 = reg.register("s-value", TRADE_V2)
     rec = _trade(3)
     rec["venue"] = "deribit"
-    out = decode_framed_records([_frame(id2, TRADE_V2, rec)], reg.snapshot(), TRADE_V1)
-    assert out[0] is not None
-    assert "venue" not in out[0]
-    assert out[0]["trade_id"] == "t-3"
+    for decode_framed in DECODERS:
+        out = decode_framed([_frame(id2, TRADE_V2, rec)], reg.snapshot(), TRADE_V1)
+        assert out[0] is not None
+        assert "venue" not in out[0]
+        assert out[0]["trade_id"] == "t-3"
 
 
 def test_reader_field_without_default_rejected():
     v3 = copy.deepcopy(TRADE_V1)
     v3["fields"] = v3["fields"] + [{"name": "mandatory", "type": "string"}]
-    with pytest.raises(ValueError, match="not backward compatible"):
-        project_record(_trade(0), TRADE_V1, v3)
+    for project in PROJECTIONS:
+        with pytest.raises(ValueError, match="not backward compatible"):
+            project(_trade(0), TRADE_V1, v3)
 
 
 def test_numeric_promotion_int_writer_double_reader():
     w = {"type": "record", "name": "R", "fields": [{"name": "x", "type": "int"}]}
     r = {"type": "record", "name": "R", "fields": [{"name": "x", "type": "double"}]}
     rec, _ = decode(w, encode(w, {"x": 7}))
-    out = project_record(rec, w, r)
-    assert out["x"] == 7.0 and isinstance(out["x"], float)
+    for project in PROJECTIONS:
+        out = project(rec, w, r)
+        assert out["x"] == 7.0 and isinstance(out["x"], float)
 
 
 def test_malformed_and_unknown_id_records_drop_not_raise():
@@ -132,12 +172,14 @@ def test_malformed_and_unknown_id_records_drop_not_raise():
     good = _frame(id1, TRADE_V1, _trade(0))
     unknown_id = _frame(999, TRADE_V1, _trade(1))
     not_framed = b"\x17garbage"
-    out = decode_framed_records(
-        [good, unknown_id, not_framed], reg.snapshot(), TRADE_V1
-    )
-    assert out[0] is not None and out[1] is None and out[2] is None
-    with pytest.raises(Exception):
-        decode_framed_records([not_framed], reg.snapshot(), TRADE_V1, on_error="raise")
+    for decode_framed in DECODERS:
+        out = decode_framed(
+            [good, unknown_id, not_framed], reg.snapshot(), TRADE_V1
+        )
+        assert out[0] is not None and out[1] is None and out[2] is None
+        for bad in (unknown_id, not_framed):
+            with pytest.raises(Exception):
+                decode_framed([bad], reg.snapshot(), TRADE_V1, on_error="raise")
 
 
 def test_parse_frame_roundtrip():
@@ -223,8 +265,9 @@ def test_forbidden_demotion_raises():
         w = {"type": "record", "name": "R", "fields": [{"name": "x", "type": wt}]}
         r = {"type": "record", "name": "R", "fields": [{"name": "x", "type": rt}]}
         val = "7" if wt == "string" else 7
-        with pytest.raises(ValueError, match="not promotable"):
-            project_record({"x": val}, w, r)
+        for project in PROJECTIONS:
+            with pytest.raises(ValueError, match="not promotable"):
+                project({"x": val}, w, r)
 
 
 def test_writer_null_into_non_nullable_reader_raises():
@@ -233,5 +276,61 @@ def test_writer_null_into_non_nullable_reader_raises():
         "fields": [{"name": "x", "type": ["null", "double"], "default": None}],
     }
     r = {"type": "record", "name": "R", "fields": [{"name": "x", "type": "double"}]}
-    with pytest.raises(ValueError, match="does not admit null"):
-        project_record({"x": None}, w, r)
+    for project in PROJECTIONS:
+        with pytest.raises(ValueError, match="does not admit null"):
+            project({"x": None}, w, r)
+
+
+# v3 dropped `price`, which every reader below needs and gives no default,
+# so v3 records never resolve; READER_PROMOTING widens two fields.
+TRADE_V3 = copy.deepcopy(TRADES_AVRO_SCHEMA)
+TRADE_V3["fields"] = [f for f in TRADE_V3["fields"] if f["name"] != "price"]
+READER_PROMOTING = copy.deepcopy(TRADE_V2)
+for _f in READER_PROMOTING["fields"]:
+    if _f["name"] in ("tick_direction", "trade_seq"):
+        _f["type"] = "double"
+
+
+@pytest.mark.parametrize(
+    "reader", [TRADE_V1, TRADE_V2, READER_PROMOTING], ids=["v1", "v2", "promoting"]
+)
+def test_compiled_resolver_matches_generic_decode(reader):
+    """v1/v2/v3 interleaved plus garbage, unknown-id, truncated and
+    bit-flipped frames: the compiled path keeps the same rows and drops
+    the same positions as generic decode + project_record, and raises
+    exactly where the reference raises under on_error='raise'."""
+    rng = random.Random(11)
+    reg = SchemaRegistry()
+    schemas = {"v1": TRADE_V1, "v2": TRADE_V2, "v3": TRADE_V3}
+    ids = {v: reg.register("s-value", s) for v, s in schemas.items()}
+    frames = []
+    for seq in range(600):
+        version = ("v1", "v2", "v3")[seq % 3]
+        rec = _trade(seq, iv=None if seq % 4 else 0.25 * seq,
+                     liquidation=("M", "T", "MT", None)[seq % 4])
+        if version == "v2":
+            rec["venue"] = "deribit" if seq % 2 else None
+        good = _frame(ids[version], schemas[version], rec)
+        frames.append(good)
+        kind = seq % 5
+        if kind == 0:
+            frames.append(good[: rng.randrange(0, len(good))])  # truncated
+        elif kind == 1:
+            frames.append(b"\x00" + (999).to_bytes(4, "big") + good[5:])  # unknown id
+        elif kind == 2:
+            frames.append(bytes([rng.randrange(1, 256)]) + good[1:])  # not framed
+        elif kind == 3:
+            flipped = bytearray(good)
+            flipped[rng.randrange(5, len(good))] ^= 1 << rng.randrange(8)
+            frames.append(bytes(flipped))
+    snapshot = reg.snapshot()
+    want = generic_decode_framed(frames, snapshot, reader)
+    got = decode_framed_records(frames, snapshot, reader)
+    assert [r is None for r in got] == [r is None for r in want]
+    assert repr(got) == repr(want)  # repr: a bit flip can decode to NaN
+    kept = sum(r is not None for r in want)
+    assert 0 < kept < len(frames)
+    for raw, ref in zip(frames, want):
+        if ref is None:
+            with pytest.raises(Exception):
+                decode_framed_records([raw], snapshot, reader, on_error="raise")

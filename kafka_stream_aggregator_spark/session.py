@@ -6,6 +6,9 @@ splitting, partition coalescing), shuffle partitions sized to the
 parallelism at hand, UTC session time zone (determinism for the DuckDB
 oracle), Arrow enabled for the pandas-UDF slow path. Python workers run
 under ``_pyworker`` (see its docstring) with this package on their path.
+``file:`` paths go through a Hadoop local file system that starts no
+``chmod`` / ``readlink`` subprocess (``jvm/``; ENGINE.md "Run / verify /
+measure").
 """
 
 from __future__ import annotations
@@ -22,12 +25,53 @@ WORKER_PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
 # the directory that holds this package, so workers can import it
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+DRIVER_CLASSPATH_CONF = "spark.driver.extraClassPath"
+# built by tools/build_forkless_fs_jar.py from jvm/src
+FORKLESS_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "forkless-localfs.jar"
+)
+FORKLESS_FS_CONFS = {
+    "spark.hadoop.fs.file.impl": "kafkastreamaggregator.fs.ForklessLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "kafkastreamaggregator.fs.ForklessLocalFs",
+}
+
+
+def _first_then(first: str, caller_value: str | None) -> str:
+    paths = [first, *(caller_value or "").split(os.pathsep)]
+    return os.pathsep.join(dict.fromkeys(p for p in paths if p))
+
 
 def worker_pythonpath(caller_value: str | None) -> str:
     """The package's parent directory first, then the caller's entries in
     their order, each path once."""
-    paths = [_PACKAGE_PARENT, *(caller_value or "").split(os.pathsep)]
-    return os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    return _first_then(_PACKAGE_PARENT, caller_value)
+
+
+def driver_classpath(caller_value: str | None) -> str:
+    """The forkless file system's jar first, then the caller's entries in
+    their order, each path once."""
+    return _first_then(FORKLESS_FS_JAR, caller_value)
+
+
+def _jvm_loads_forkless_fs() -> bool:
+    """Whether the JVM this process drives can load the forkless file
+    system: none runs yet, so ``get_spark`` launches it with the jar on its
+    class path; or the running one (launched by an earlier ``get_spark``)
+    has the classes. A JVM started another way (a vanilla SparkContext, or
+    the one behind $PYSPARK_GATEWAY_PORT) may lack them; it keeps stock
+    Hadoop."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    try:
+        for cls in FORKLESS_FS_CONFS.values():
+            jvm.java.lang.Class.forName(cls)
+    except Py4JJavaError:
+        return False
+    return True
 
 
 def prefer_sort_merge_join(value: str | None) -> bool:
@@ -87,6 +131,9 @@ def get_spark(
     )
     extra = dict(extra or {})
     extra[WORKER_PYTHONPATH_CONF] = worker_pythonpath(extra.get(WORKER_PYTHONPATH_CONF))
+    if _jvm_loads_forkless_fs():
+        extra[DRIVER_CLASSPATH_CONF] = driver_classpath(extra.get(DRIVER_CLASSPATH_CONF))
+        extra = {**FORKLESS_FS_CONFS, **extra}
     for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -133,7 +133,8 @@ class ProgressListener:
     The reference traces per-record spans through Kafka headers into
     Zipkin (registry_handler.rs:10-48); Spark's idiom is query-progress
     events — rows/sec, batch durations, watermark, state size — captured
-    here into a list the caller can inspect or forward.
+    here into a list the caller can inspect or forward. Each entry keeps,
+    per state operator, its rows, memory, commit time and late-row drops.
     """
 
     def __init__(self):
@@ -152,6 +153,16 @@ class ProgressListener:
                         "batchId": p.batchId,
                         "numInputRows": p.numInputRows,
                         "durationMs": dict(p.durationMs),
+                        "stateOperators": [
+                            {
+                                "operatorName": op.operatorName,
+                                "numRowsTotal": op.numRowsTotal,
+                                "memoryUsedBytes": op.memoryUsedBytes,
+                                "commitTimeMs": op.commitTimeMs,
+                                "numRowsDroppedByWatermark": op.numRowsDroppedByWatermark,
+                            }
+                            for op in p.stateOperators
+                        ],
                     }
                 )
 

@@ -93,11 +93,18 @@ def frame_trades(trades: DataFrame, schema_id: int = 7) -> DataFrame:
 def decode_trades(framed: DataFrame) -> DataFrame:
     """agg-producer consumer analogue (consumer.rs:76-85): strip the
     5-byte frame, parse the body against the fixed trade schema, surface
-    event_time from the epoch-ms timestamp."""
+    event_time from the epoch-ms timestamp. A record that leaves a
+    non-nullable TRADE_SCHEMA field null (missing, or a body that does not
+    parse) is dropped, as the Avro dispatch drops it (consumer.rs:106-108):
+    one null price would otherwise null its whole window's EWMA fold."""
     body = confluent_avro_payload(F.col("value")).cast("string")
+    required = [f.name for f in TRADE_SCHEMA.fields if not f.nullable]
+    # inline() expands the parsed struct once; a null check on ``t.*``
+    # columns would be pushed below that projection and parse every body
+    # again for each required field
     return (
-        framed.select(F.from_json(body, TRADE_SCHEMA).alias("t"))
-        .select("t.*")
+        framed.select(F.inline(F.array(F.from_json(body, TRADE_SCHEMA))))
+        .dropna(subset=required)
         .withColumn("event_time", F.timestamp_millis(F.col("timestamp")))
     )
 

@@ -332,19 +332,44 @@ def test_stream_stream_join(spark, events_dir):
 def test_progress_listener(spark, events_dir):
     from kafka_stream_aggregator_spark.streaming.sinks import ProgressListener
 
+    import time
+
     lis = ProgressListener().attach(spark)
     try:
         stream = file_stream(spark, events_dir, EVENTS_SCHEMA)
         q = start_to_memory(stream.select("event_id"), "s_listener")
         q.awaitTermination()
-        import time
-
         for _ in range(20):  # listener events are async
             if lis.progress:
                 break
             time.sleep(0.5)
         assert lis.started
         assert any(p["numInputRows"] > 0 for p in lis.progress)
+        assert all(p["stateOperators"] == [] for p in lis.progress)
+
+        # a windowed aggregation reports its state store per trigger
+        lis.progress.clear()
+        windows = streaming_windowed_ewma(stream, group_cols=("event_type",))
+        q = start_to_memory(windows, "s_listener_state")
+        q.awaitTermination()
+        for _ in range(20):
+            if len(lis.progress) >= len(q.recentProgress):
+                break
+            time.sleep(0.5)
+        assert len(lis.progress) == len(q.recentProgress)
+        ops = [op for p in lis.progress for op in p["stateOperators"]]
+        assert ops and len(ops) == len(lis.progress)
+        for op in ops:
+            assert set(op) == {
+                "operatorName", "numRowsTotal", "memoryUsedBytes",
+                "commitTimeMs", "numRowsDroppedByWatermark",
+            }
+            assert all(isinstance(op[k], int) and op[k] >= 0 for k in op if k != "operatorName")
+        assert max(op["numRowsTotal"] for op in ops) > 0
+        assert max(op["memoryUsedBytes"] for op in ops) > 0
+        last = q.recentProgress[-1].stateOperators[0]
+        assert ops[-1]["numRowsTotal"] == last.numRowsTotal
+        assert ops[-1]["numRowsDroppedByWatermark"] == last.numRowsDroppedByWatermark
     finally:
         lis.detach(spark)
 

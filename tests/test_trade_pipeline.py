@@ -140,3 +140,22 @@ def test_avro_framed_chain_equals_json_chain(spark):
         for r in aggregate_trades(decode_trades_avro(frame_trades_avro(trades))).collect()
     }
     assert via_avro == via_json and len(via_avro) > 0
+
+
+def test_json_record_without_price_drops_only_itself(spark):
+    """One framed JSON trade without ``price`` (and one body that is not
+    JSON) in a good window: the window still emits, from its good trades
+    only. The Avro dispatch has the same contract (consumer.rs:106-108)."""
+    from pyspark.sql import functions as F
+
+    trades = synthetic_trades(spark, n=3).filter("price > 0")
+    no_price = trades.limit(1).drop("price").withColumn("trade_seq", F.lit(99).cast("long"))
+    not_json = spark.createDataFrame(
+        [("0", bytearray(b"\x00\x00\x00\x00\x07{not json"))], "key string, value binary"
+    )
+    framed = frame_trades(trades).unionByName(frame_trades(no_price)).unionByName(not_json)
+    assert framed.count() == 4
+    assert decode_trades(framed).count() == 2
+    (window,) = aggregate_trades(decode_trades(framed)).collect()
+    assert window["n_trades"] == 2
+    assert window["current"] == 1.4286288893058574
